@@ -10,9 +10,10 @@ Re-expresses the reference's advisory state machine
 2. **Portable SQL text** generators — the *same* CASE logic as ANSI
    SQL strings, usable both by ``F.expr`` and by the DuckDB oracle, so
    Spark and oracle share one definition by construction.
-3. **Python UDF parity** (plain + struct-returning) mirroring the
-   reference's registered-UDF surface (state_machine/udf.py:12-86) —
-   kept to prove the UDF surface and as an equivalence oracle for (1).
+3. **Python UDF parity** (``with_transition_udf``, and the
+   struct-shaped ``full_transition`` in plain Python) mirroring the
+   reference's UDF surface (state_machine/udf.py:12-86) — kept as an
+   equivalence oracle for (1).
 
 Semantics pinned by the reference's test suite
 (test/test_state_transitions.py, see SURVEY.md §5):
@@ -178,16 +179,6 @@ def with_transition(
 
 # --- 4. UDF parity surface (reference: state_machine/udf.py) ----------------
 
-TRANSITION_RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("success", T.BooleanType(), False),
-        T.StructField("old_state", T.StringType(), True),
-        T.StructField("new_state", T.StringType(), True),
-        T.StructField("reason", T.StringType(), True),
-    ]
-)
-
-
 def full_transition(from_state: str | None, to_state: str | None):
     ok = is_valid_transition(from_state, to_state)
     return (
@@ -196,23 +187,6 @@ def full_transition(from_state: str | None, to_state: str | None):
         apply_transition(from_state, to_state),
         transition_explanation(from_state, to_state),
     )
-
-
-def register_udfs(spark) -> None:
-    """Register the SQL-callable UDF surface, mirroring the reference's
-    ``register_state_machine_udfs`` (state_machine/udf.py:12-86)."""
-    spark.udf.register("is_valid_transition", is_valid_transition, T.BooleanType())
-    spark.udf.register("apply_transition", apply_transition, T.StringType())
-    spark.udf.register(
-        "get_transition_explanation", transition_explanation, T.StringType()
-    )
-    spark.udf.register("full_transition", full_transition, TRANSITION_RESULT_SCHEMA)
-
-
-def transition_udf() -> Column:
-    """DataFrame-API struct-returning UDF factory (reference:
-    state_transitions.py:187-213)."""
-    return F.udf(full_transition, TRANSITION_RESULT_SCHEMA)
 
 
 def with_transition_udf(df: DataFrame, from_col: str, to_col: str) -> DataFrame:

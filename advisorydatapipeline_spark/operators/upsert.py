@@ -8,7 +8,8 @@ using a real ``left_anti`` join (same physical plan, clearer intent).
 The reference reads prod and overwrites prod *in the same query*
 (state_machine/pipeline.py:72-95), dodging the
 lazy-plan-over-deleted-files hazard only by accident (SURVEY.md §3.3).
-:func:`upsert_to_path` fixes that with write-to-temp-then-swap. A
+:func:`upsert_to_path` writes the merge once beside prod and publishes
+it with an atomic directory exchange (sources/io.committing). A
 table format with native MERGE (Delta/Iceberg) is the real fix at
 scale; jars are not in this image, so that connector is stubbed
 behind an import-try in sources/.
@@ -21,11 +22,12 @@ threshold; ``broadcast_new`` forces it).
 
 from __future__ import annotations
 
-import shutil
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from advisorydatapipeline_spark.sources.io import committing
 
 
 def upsert(
@@ -54,13 +56,10 @@ def upsert_to_path(
     read_table,
     write_table,
 ) -> None:
-    """Safe read-merge-overwrite against one prod path: materialize the
-    merge to ``<path>__tmp`` first, then swap — never plan over files
-    being deleted."""
+    """Merge ``new_df`` into the table at ``prod_path`` and commit it
+    atomically: the merge is written once and published by
+    :func:`~advisorydatapipeline_spark.sources.io.committing`, so
+    readers see the old or the new table, never a partial one."""
     old_df = read_table(spark, prod_path, schema)
-    merged = upsert(new_df, old_df, keys)
-    tmp = prod_path.rstrip("/") + "__tmp"
-    write_table(merged, tmp, schema=schema)
-    final = read_table(spark, tmp, schema)
-    write_table(final, prod_path, schema=schema)
-    shutil.rmtree(tmp.removeprefix("file:"), ignore_errors=True)
+    with committing(prod_path) as tmp:
+        write_table(upsert(new_df, old_df, keys), tmp, schema=schema)

@@ -17,15 +17,16 @@ the same guarantees:
 Differences from the reference, by design (SURVEY.md §7):
 - enrichment runs on the executors (operators/enrichment.py
   mapInPandas) instead of driver collect() + thread pool;
-- the prod upsert materializes to a temp path then swaps
-  (operators/upsert.upsert_to_path) instead of reading and
-  overwriting the same files in one query;
-- counts for logging are lazy ``observe()`` metrics, not extra jobs.
+- prod and the enrichment cache are each written once beside the
+  live table and published by an atomic directory exchange
+  (sources/io.committing), instead of reading and overwriting the
+  same files in one query — a failed commit leaves the old version;
+- no eager logging ``count()`` jobs; ``sources/io.observed`` attaches
+  lazy counts where something reads them.
 """
 
 from __future__ import annotations
 
-import shutil
 from dataclasses import dataclass
 from datetime import datetime, timedelta
 
@@ -47,7 +48,7 @@ from advisorydatapipeline_spark.operators.ttl_cache import (
 from advisorydatapipeline_spark.operators.upsert import upsert_to_path
 from advisorydatapipeline_spark.operators.window_ops import top_k_per_key
 from advisorydatapipeline_spark.sources.io import (
-    observed,
+    committing,
     read_table,
     register_view,
     write_table,
@@ -157,7 +158,6 @@ def run_enrich_phase(
         ttl_h = config.cache_ttl_hours
         cutoff = now - timedelta(hours=ttl_h)
         todo = pending_work(worklist, cache, KEYS, src.upstream.name, cutoff)
-        todo, n_obs = observed(todo, f"enrich_{src.upstream.name}_{run_id}")
 
         raw = enrich_map_in_pandas(todo, src.upstream, KEYS)
         raw_path = f"{config.run_path(run_id)}/enrichment/raw/{src.upstream.name}"
@@ -179,17 +179,13 @@ def run_enrich_phase(
         # cache merge AFTER successful staging (reference cache.py:109)
         cache = update_cache(cache, todo, KEYS, src.upstream.name, now)
 
-    # persist the merged cache once for all sources (temp-then-swap to
-    # avoid planning over files we are deleting)
-    tmp = config.cache_path + "__tmp"
-    write_table(
-        cache.withColumnRenamed("package", "package_name"),
-        tmp,
-        schema=schemas.ENRICHMENT_CACHE_SCHEMA,
-    )
-    cache_final = read_table(spark, tmp, schemas.ENRICHMENT_CACHE_SCHEMA)
-    write_table(cache_final, config.cache_path, schema=schemas.ENRICHMENT_CACHE_SCHEMA)
-    shutil.rmtree(tmp.removeprefix("file:"), ignore_errors=True)
+    # commit the merged cache once for all sources
+    with committing(config.cache_path) as tmp:
+        write_table(
+            cache.withColumnRenamed("package", "package_name"),
+            tmp,
+            schema=schemas.ENRICHMENT_CACHE_SCHEMA,
+        )
 
     merged = normalized_parts[0]
     for part in normalized_parts[1:]:

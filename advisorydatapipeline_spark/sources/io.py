@@ -16,12 +16,18 @@ Re-expresses the reference's ``read_table`` / ``write_table``
   ``key=value`` path strings; output sizing is left to AQE coalescing
   instead of the reference's unconditional ``repartition(1)``
   (spark_utils.py:52-53 — an anti-pattern at scale, SURVEY.md §4).
+- Tables that a run rewrites (prod, the enrichment cache) are
+  replaced through :func:`committing`: the new version is written once
+  beside the table and published by an atomic directory exchange.
 """
 
 from __future__ import annotations
 
+import ctypes
 import os
-from collections.abc import Sequence
+import shutil
+from collections.abc import Iterator, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -133,6 +139,48 @@ def write_table(
         writer.orc(path)
     else:
         writer.format(fmt).save(path)
+
+
+_AT_FDCWD = -100
+_RENAME_EXCHANGE = 2
+
+
+def _exchange(a: str, b: str) -> None:
+    """Swap two existing directory entries in one step (Linux
+    ``renameat2(RENAME_EXCHANGE)``)."""
+    renameat2 = ctypes.CDLL(None, use_errno=True).renameat2
+    renameat2.argtypes = (
+        ctypes.c_int, ctypes.c_char_p, ctypes.c_int, ctypes.c_char_p, ctypes.c_uint
+    )
+    renameat2.restype = ctypes.c_int
+    if renameat2(
+        _AT_FDCWD, os.fsencode(a), _AT_FDCWD, os.fsencode(b), _RENAME_EXCHANGE
+    ):
+        err = ctypes.get_errno()
+        raise OSError(err, os.strerror(err), a, None, b)
+
+
+@contextmanager
+def committing(path: str) -> Iterator[str]:
+    """Replace the table at ``path`` atomically: the body writes the
+    new version once to the yielded sibling ``<path>__tmp``; on
+    success it is published by exchanging the two directories and the
+    old version is deleted. If the body raises, ``path`` is untouched
+    (a leftover ``__tmp`` is overwritten by the next commit). A read
+    of ``path`` sees the old or the new version, never a partial one.
+
+    The body may read ``path`` lazily: nothing under it changes until
+    the body has returned. Local filesystem only.
+    """
+    path = path.rstrip("/")
+    tmp = path + "__tmp"
+    yield tmp
+    local, local_tmp = path.removeprefix("file:"), tmp.removeprefix("file:")
+    if os.path.exists(local):
+        _exchange(local_tmp, local)
+        shutil.rmtree(local_tmp)
+    else:
+        os.rename(local_tmp, local)
 
 
 def write_raw(

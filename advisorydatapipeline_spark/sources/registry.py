@@ -41,19 +41,6 @@ class SourceConfig:
     kind: str = "generic"  # public_json | jdbc | parquet | ...
 
 
-@dataclass(frozen=True)
-class EnrichmentSourceConfig:
-    """Pluggable enrichment source (reference:
-    enrichment/definitions.py:25-37): how to fetch raw enrichment for
-    a worklist, how to normalize it, and its precedence priority."""
-
-    name: str
-    priority: int
-    enrich: Callable[[SparkSession, DataFrame], DataFrame]
-    normalize: Callable[[DataFrame], DataFrame]
-    cache_ttl_hours: float | None = None
-
-
 def run_ingestion(
     spark: SparkSession,
     config: PipelineConfig,

@@ -120,7 +120,9 @@ def start_streaming_upsert(
 ):
     """Continuously upsert per-key latest state into a prod parquet
     table: each micro-batch runs the reference's anti-join+union merge
-    (operators/upsert.upsert_to_path) transactionally via foreachBatch.
+    via foreachBatch (operators/upsert.upsert_to_path), which writes
+    the merged table once and publishes it by an atomic directory
+    exchange. A batch that fails leaves prod at the previous batch.
     """
     from advisorydatapipeline_spark.operators.upsert import upsert_to_path
     from advisorydatapipeline_spark.sources.io import read_table, write_table
@@ -173,10 +175,11 @@ def start_streaming_merge(
     MERGE clauses express semantics last-writer-wins upsert cannot,
     e.g. ACCUMULATE across batches (``WHEN MATCHED UPDATE SET n =
     t.n + s.n``) for incremental rollups. Each batch reads prod,
-    merges (one outer join), and writes temp-then-swap — the same
-    exactly-once-per-batch discipline as the upsert sink; on a
-    MERGE-native table format the foreachBatch body is the single
-    place to swap in a real ``MERGE INTO``.
+    merges (one outer join), writes the result once and publishes it
+    by an atomic directory exchange (sources/io.committing) — the same
+    commit as the upsert sink; on a MERGE-native table format the
+    foreachBatch body is the single place to swap in a real
+    ``MERGE INTO``.
 
     ``prepare`` maps the raw micro-batch to the merge source (e.g. a
     per-batch aggregation). Stream RAW rows and aggregate here, NOT
@@ -184,15 +187,17 @@ def start_streaming_merge(
     CUMULATIVE per-key state each trigger, which an accumulating
     MERGE would double-count."""
     from advisorydatapipeline_spark.operators.merge import merge_into
-    from advisorydatapipeline_spark.sources.io import read_table, write_table
+    from advisorydatapipeline_spark.sources.io import (
+        committing,
+        read_table,
+        write_table,
+    )
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
         source = prepare(batch_df) if prepare is not None else batch_df
-        # read prod, MERGE the batch in, write temp-then-swap (same
-        # lazy-plan-over-deleted-files discipline as upsert_to_path)
         target = read_table(spark, prod_path, schema)
         merged = merge_into(
             target,
@@ -201,13 +206,8 @@ def start_streaming_merge(
             when_matched=when_matched,
             when_not_matched=when_not_matched,
         )
-        tmp = prod_path.rstrip("/") + "__tmp"
-        write_table(merged, tmp, schema=schema)
-        final = read_table(spark, tmp, schema)
-        write_table(final, prod_path, schema=schema)
-        import shutil as _sh
-
-        _sh.rmtree(tmp.removeprefix("file:"), ignore_errors=True)
+        with committing(prod_path) as tmp:
+            write_table(merged, tmp, schema=schema)
 
     writer = (
         updates.writeStream.outputMode("append")

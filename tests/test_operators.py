@@ -36,30 +36,71 @@ def test_upsert_new_wins_old_survives(spark):
     assert got == [(1, "n1"), (2, "n2"), (3, "o3")]
 
 
-def test_upsert_to_path_same_path_safe(spark, tmp_path):
-    from pyspark.sql import types as T
+KV_SCHEMA = "k int not null, v string"
 
+
+def test_upsert_to_path_same_path_safe(spark, tmp_path):
     from advisorydatapipeline_spark.sources.io import read_table, write_table
 
-    schema = T.StructType(
-        [
-            T.StructField("k", T.IntegerType(), False),
-            T.StructField("v", T.StringType(), True),
-        ]
-    )
-    prod = str(tmp_path / "prod")
-    write_table(
-        spark.createDataFrame([(2, "o2"), (3, "o3")], schema), prod, schema=schema
-    )
+    schema = spark.createDataFrame([], KV_SCHEMA).schema
     new = spark.createDataFrame([(1, "n1"), (2, "n2")], schema)
-    upsert_to_path(
-        spark, new, prod, ["k"], schema,
-        read_table=read_table, write_table=write_table,
-    )
+    # an existing table is exchanged; an absent one (first commit) is
+    # renamed into place
+    for i, (old_rows, want) in enumerate([
+        ([(2, "o2"), (3, "o3")], [(1, "n1"), (2, "n2"), (3, "o3")]),
+        (None, [(1, "n1"), (2, "n2")]),
+    ]):
+        prod = str(tmp_path / f"prod{i}")
+        if old_rows is not None:
+            write_table(spark.createDataFrame(old_rows, schema), prod, schema=schema)
+        upsert_to_path(
+            spark, new, prod, ["k"], schema,
+            read_table=read_table, write_table=write_table,
+        )
+        back = read_table(spark, prod, schema)
+        assert sorted((r.k, r.v) for r in back.collect()) == want
+        assert not (tmp_path / f"prod{i}__tmp").exists()
+
+
+def test_upsert_to_path_failed_commit_keeps_old_table(spark, tmp_path, monkeypatch):
+    from advisorydatapipeline_spark.sources import io
+    from advisorydatapipeline_spark.sources.io import read_table, write_table
+
+    schema = spark.createDataFrame([], KV_SCHEMA).schema
+    prod = str(tmp_path / "prod")
+    old = [(2, "o2"), (3, "o3")]
+    write_table(spark.createDataFrame(old, schema), prod, schema=schema)
+
+    def fail_on_one_row(k, v):
+        if k == 7:
+            raise RuntimeError("injected write failure")
+        return v
+
+    # the write stage dies part-way through: the UDF runs after the
+    # shuffle, in the tasks that write the files
+    rows = [(i, f"n{i}") for i in range(1, 10)]
+    new = spark.createDataFrame(rows, schema).repartition(4)
+    failing = new.withColumn("v", F.udf(fail_on_one_row, "string")("k", "v"))
+    with pytest.raises(Exception, match="injected write failure"):
+        upsert_to_path(
+            spark, failing, prod, ["k"], schema,
+            read_table=read_table, write_table=write_table,
+        )
     back = read_table(spark, prod, schema)
-    assert sorted((r.k, r.v) for r in back.collect()) == [
-        (1, "n1"), (2, "n2"), (3, "o3"),
-    ]
+    assert sorted((r.k, r.v) for r in back.collect()) == old
+
+    # the write completes but publishing it fails
+    def no_exchange(a, b):
+        raise OSError("injected exchange failure")
+
+    monkeypatch.setattr(io, "_exchange", no_exchange)
+    with pytest.raises(OSError, match="injected exchange failure"):
+        upsert_to_path(
+            spark, new, prod, ["k"], schema,
+            read_table=read_table, write_table=write_table,
+        )
+    back = read_table(spark, prod, schema)
+    assert sorted((r.k, r.v) for r in back.collect()) == old
 
 
 def test_topk_and_maxby_agree(spark, sf_dir):

@@ -9,8 +9,10 @@ from datetime import datetime, timedelta, timezone
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from advisorydatapipeline_spark import schemas
 from advisorydatapipeline_spark.config import PipelineConfig
 from advisorydatapipeline_spark.operators.enrichment import UpstreamSource
 from advisorydatapipeline_spark.pipeline import (
@@ -203,3 +205,126 @@ def test_ttl_cache_skips_fresh_keys(spark, cfg_base):
     files = list(raw_b.glob("*.parquet"))
     n = sum(pq.read_metadata(f).num_rows for f in files)
     assert n == 0
+
+
+# --- commit protocol: one write per table, atomic publish -------------------
+
+LIFECYCLE_ADV = [
+    ("alpha", "CVE-1", None),
+    ("beta", "CVE-2", None),
+    ("gamma", "CVE-3", None),
+]
+LIFECYCLE_OV = [("cve-3", "GAMMA", "Not applicable here", None, "not_applicable")]
+V1 = {("CVE-1", "alpha"): "1.2.3"}
+V2 = {("CVE-1", "alpha"): "1.2.3", ("CVE-2", "beta"): "2.0"}
+
+
+def run_at(spark, base, run_id, hours, version_map):
+    now = T0 + timedelta(hours=hours)
+    return run_pipeline(
+        spark,
+        PipelineConfig(base, cache_ttl_hours=24.0, clock=lambda: now),
+        run_id,
+        advisories=adv_df(spark, LIFECYCLE_ADV),
+        overrides=ov_df(spark, LIFECYCLE_OV),
+        sources=[source("nvd", make_fetch(version_map), 5, now)],
+    )
+
+
+def table_rows(spark, path, schema):
+    from advisorydatapipeline_spark.sources.io import read_table
+
+    return sorted(tuple(r) for r in read_table(spark, path, schema).collect())
+
+
+def prod_rows(spark, base):
+    path = f"{base}/prod/state_machine/cve_state_machine"
+    return table_rows(spark, path, schemas.STATE_MACHINE_SCHEMA)
+
+
+def cache_rows(spark, base):
+    path = f"{base}/enrichment_cache"
+    return table_rows(spark, path, schemas.ENRICHMENT_CACHE_SCHEMA)
+
+
+def test_each_table_is_written_once_and_never_read_back(spark, cfg_base, monkeypatch):
+    from advisorydatapipeline_spark import pipeline
+
+    # prod and cache exist after run 1, so run 2 replaces both
+    run_at(spark, cfg_base, "r1", 0, V1)
+    writes, reads = [], []
+    write, read = pipeline.write_table, pipeline.read_table
+
+    def recording_write(df, path, **kw):
+        writes.append(path)
+        write(df, path, **kw)
+
+    def recording_read(spark, path, schema, **kw):
+        reads.append(path)
+        return read(spark, path, schema, **kw)
+
+    monkeypatch.setattr(pipeline, "write_table", recording_write)
+    monkeypatch.setattr(pipeline, "read_table", recording_read)
+    run_at(spark, cfg_base, "r2", 25, V2)
+
+    for table in (
+        f"{cfg_base}/prod/state_machine/cve_state_machine",
+        f"{cfg_base}/enrichment_cache",
+    ):
+        assert [p for p in writes if p.startswith(table)] == [table + "__tmp"]
+    assert not [p for p in reads if p.endswith("__tmp")]
+    assert not list(Path(cfg_base).glob("**/*__tmp"))
+
+
+def test_failed_cache_write_keeps_old_cache_and_prod(spark, cfg_base, monkeypatch):
+    from advisorydatapipeline_spark import pipeline
+
+    run_at(spark, cfg_base, "r1", 0, V1)
+    cache_before, prod_before = cache_rows(spark, cfg_base), prod_rows(spark, cfg_base)
+    write = pipeline.write_table
+
+    def fail_on_beta(package):
+        if package == "beta":
+            raise RuntimeError("injected write failure")
+        return package
+
+    def failing_cache_write(df, path, **kw):
+        # the UDF sits above the last shuffle, so it fails inside the
+        # write stage itself, after other tasks have written files
+        if path.startswith(f"{cfg_base}/enrichment_cache"):
+            boom = F.udf(fail_on_beta, "string")
+            df = df.repartition(4).withColumn("package_name", boom("package_name"))
+        write(df, path, **kw)
+
+    monkeypatch.setattr(pipeline, "write_table", failing_cache_write)
+    with pytest.raises(Exception, match="injected write failure"):
+        run_at(spark, cfg_base, "r2", 25, V2)
+    assert cache_rows(spark, cfg_base) == cache_before
+    assert prod_rows(spark, cfg_base) == prod_before
+
+
+def test_failed_publish_keeps_prod_and_rerun_matches_clean_run(
+    spark, tmp_path, monkeypatch
+):
+    from advisorydatapipeline_spark.sources import io
+
+    base, clean = str(tmp_path / "faulty"), str(tmp_path / "clean")
+    for b in (base, clean):
+        run_at(spark, b, "r1", 0, V1)
+    run_at(spark, clean, "r2", 25, V2)
+    want = prod_rows(spark, clean)
+    before = prod_rows(spark, base)
+    assert want != before
+
+    def no_exchange(a, b):
+        raise OSError("injected exchange failure")
+
+    monkeypatch.setattr(io, "_exchange", no_exchange)
+    with pytest.raises(OSError, match="injected exchange failure"):
+        run_at(spark, base, "r2", 25, V2)
+    assert prod_rows(spark, base) == before
+
+    monkeypatch.undo()
+    run_at(spark, base, "r2", 25, V2)
+    assert prod_rows(spark, base) == want
+    assert not list(Path(base).glob("**/*__tmp"))
