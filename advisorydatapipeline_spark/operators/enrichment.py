@@ -72,10 +72,11 @@ def enrich_map_in_pandas(
     *,
     parallelism: int | None = None,
 ) -> DataFrame:
-    """Run ``source.enrichment_fn(key1, key2) -> dict`` for every
-    worklist row, on the executors, rate-limited per partition.
+    """Run ``source.enrichment_fn(key1, key2) -> dict`` once per
+    distinct worklist key, on the executors, rate-limited per partition.
+    The dedup runs after the key repartition and reuses its exchange.
 
-    Output schema: key columns + ``source.result_schema`` fields.
+    Output: key columns + ``source.result_schema`` fields, one row per key.
     Rows whose fetch exhausts retries surface with all-null result
     fields rather than failing the job (the reference logs-and-drops;
     null-surface keeps the failure observable downstream).
@@ -113,7 +114,7 @@ def enrich_map_in_pandas(
             )
 
     n = parallelism or worklist.sparkSession.sparkContext.defaultParallelism
-    work = worklist.select(k1, k2).distinct().repartition(n, k1, k2)
+    work = worklist.select(k1, k2).repartition(n, k1, k2).distinct()
     return work.mapInPandas(run, out_schema)
 
 

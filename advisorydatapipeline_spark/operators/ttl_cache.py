@@ -9,8 +9,8 @@ parameters — deterministic under test, injectable from
 
 This is batch-incremental computation (SURVEY.md §2.9): the engine's
 analogue of event-time state expiry. At scale the cache is a compact
-keys-only table: the anti-join broadcasts it when small, and the
-merge is one partial-aggregated shuffle on the key.
+keys-only table, probed as is (no dedup) and broadcast when small;
+the merge is one partial-aggregated shuffle on the key.
 """
 
 from __future__ import annotations
@@ -44,11 +44,9 @@ def pending_work(
     source_name: str,
     cutoff: datetime,
 ) -> DataFrame:
-    """Work items whose key is NOT freshly cached — distinct cached
-    keys, then a left-anti join (reference: cache.py:85-95)."""
-    cached_keys = (
-        recent_entries(cache_df, source_name, cutoff).select(*keys).distinct()
-    )
+    """Work items whose key is NOT freshly cached: a left-anti join on
+    the fresh cached keys, duplicates and all (reference: cache.py:85-95)."""
+    cached_keys = recent_entries(cache_df, source_name, cutoff).select(*keys)
     return work_df.join(cached_keys, on=list(keys), how="left_anti")
 
 

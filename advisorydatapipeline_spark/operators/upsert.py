@@ -38,8 +38,9 @@ def upsert(
     broadcast_new: bool = False,
 ) -> DataFrame:
     """New rows win per key; old rows survive only where the key is
-    absent from ``new_df``. Columns are aligned by name."""
-    probe = new_df.select(*keys).dropDuplicates(list(keys))
+    absent from ``new_df`` (a left-anti join, so duplicate new keys need
+    no dedup). Columns are aligned by name."""
+    probe = new_df.select(*keys)
     if broadcast_new:
         probe = F.broadcast(probe)
     survivors = old_df.join(probe, on=list(keys), how="left_anti")

@@ -129,6 +129,7 @@ def run_enrich_phase(
     """TTL-cache-gated enrichment per source; returns the union of all
     normalized enrichment staged this run."""
     now = config.clock()
+    cutoff = now - timedelta(hours=config.cache_ttl_hours)
 
     # worklist: advisory keys not manually overridden (reference
     # packages_to_enrich.py: case-insensitive compound-key left anti)
@@ -137,15 +138,12 @@ def run_enrich_phase(
     )
     ov_keys = overrides.select(
         F.lower("cve_id").alias("_ck"), F.lower("package").alias("_pk")
-    ).distinct()
-    worklist = (
-        adv_keys.join(
-            F.broadcast(ov_keys),
-            (F.lower(adv_keys.cve_id) == ov_keys._ck)
-            & (F.lower(adv_keys.package) == ov_keys._pk),
-            "left_anti",
-        )
-        .distinct()
+    )
+    worklist = adv_keys.join(
+        F.broadcast(ov_keys),
+        (F.lower(adv_keys.cve_id) == ov_keys._ck)
+        & (F.lower(adv_keys.package) == ov_keys._pk),
+        "left_anti",
     )
 
     # cache stores the key as package_name (reference cache_schema);
@@ -155,8 +153,6 @@ def run_enrich_phase(
     ).withColumnRenamed("package_name", "package")
     normalized_parts: list[DataFrame] = []
     for src in sources:
-        ttl_h = config.cache_ttl_hours
-        cutoff = now - timedelta(hours=ttl_h)
         todo = pending_work(worklist, cache, KEYS, src.upstream.name, cutoff)
 
         raw = enrich_map_in_pandas(todo, src.upstream, KEYS)
@@ -176,8 +172,9 @@ def run_enrich_phase(
             read_table(spark, norm_path, schemas.NORMALIZED_ENRICHMENT_SCHEMA)
         )
 
-        # cache merge AFTER successful staging (reference cache.py:109)
-        cache = update_cache(cache, todo, KEYS, src.upstream.name, now)
+        # cache merge AFTER successful staging (reference cache.py:109),
+        # keyed by the staged rows: one per distinct `todo` key
+        cache = update_cache(cache, raw_staged, KEYS, src.upstream.name, now)
 
     # commit the merged cache once for all sources
     with committing(config.cache_path) as tmp:

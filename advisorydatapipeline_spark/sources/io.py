@@ -3,9 +3,9 @@
 Re-expresses the reference's ``read_table`` / ``write_table``
 (pipeline_libs/spark/spark_utils.py:17-215) Spark-first:
 
-- Schema is mandatory and enforced by **cast-projection** (select +
-  cast per declared column), which doubles as column pruning
-  (reference :49-50, :114-116).
+- Schema is mandatory: parquet, JSON and CSV are read with it (no
+  inference job), then **cast-projection** enforces it and prunes
+  columns (reference :49-50, :114-116); parquet file types must widen to it.
 - **Missing path => empty DataFrame with the declared schema** — this
   "absent = empty relation" contract is load-bearing: it is how the
   first run bootstraps prod state (reference :158-161,
@@ -77,8 +77,11 @@ def read_table(
 ) -> DataFrame:
     """Read ``path`` (or ``paths``) as ``fmt``, conformed to ``schema``.
 
-    Any path that does not exist degrades to an empty relation with the
-    declared schema rather than an error.
+    Parquet, JSON and CSV are read with ``schema``: no Spark job runs
+    here. A parquet type Spark cannot widen to the declared one (say
+    ``string`` to ``int``) fails at the first action with
+    ``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``. A missing
+    path reads as an empty relation with the declared schema.
     """
     if schema is None:
         raise ValueError("schema is mandatory for read_table")
@@ -94,7 +97,7 @@ def read_table(
     if base_path:
         reader = reader.option("basePath", base_path)
     if fmt == "parquet":
-        df = reader.parquet(*targets)
+        df = reader.schema(schema).parquet(*targets)
     elif fmt == "json":
         df = reader.schema(schema).json(targets)
     elif fmt == "csv":

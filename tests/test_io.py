@@ -53,6 +53,33 @@ def test_parquet_roundtrip(spark, tmp_path):
     assert sorted((r.k, r.v) for r in back.collect()) == [("a", 1), ("b", None)]
 
 
+def test_parquet_reads_through_declared_schema(spark, tmp_path):
+    path = str(tmp_path / "drift")
+    spark.createDataFrame(
+        [("a", 1, "x")], "k string, v int, junk string"
+    ).write.parquet(path)
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType(), True),
+            T.StructField("v", T.LongType(), True),  # int in the file: widened
+            T.StructField("m", T.StringType(), True),  # not in the file: NULL
+        ]
+    )
+    back = read_table(spark, path, schema)  # `junk` is pruned
+    assert back.schema == schema
+    assert [tuple(r) for r in back.collect()] == [("a", 1, None)]
+
+    # the one departure from infer-then-cast: a type Spark cannot
+    # widen fails at the first action instead of being cast
+    path = str(tmp_path / "string_as_int")
+    spark.createDataFrame([("a", "7")], "k string, v string").write.parquet(path)
+    back = read_table(spark, path, SIMPLE)
+    with pytest.raises(
+        Exception, match="FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH"
+    ):
+        back.collect()
+
+
 def test_csv_and_json_roundtrip(spark, tmp_path):
     df = spark.createDataFrame([("a", 1), ("b", 2)], SIMPLE)
     for fmt in ("csv", "json"):

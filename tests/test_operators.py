@@ -30,10 +30,12 @@ from advisorydatapipeline_spark.operators.window_ops import (
 
 
 def test_upsert_new_wins_old_survives(spark):
-    new = spark.createDataFrame([(1, "n1"), (2, "n2")], "k int, v string")
     old = spark.createDataFrame([(2, "o2"), (3, "o3")], "k int, v string")
-    got = sorted((r.k, r.v) for r in upsert(new, old, ["k"]).collect())
-    assert got == [(1, "n1"), (2, "n2"), (3, "o3")]
+    # a duplicated new key probes the anti-join twice: same survivors
+    for new_rows in ([(1, "n1"), (2, "n2")], [(1, "n1"), (2, "n2"), (2, "n2")]):
+        new = spark.createDataFrame(new_rows, "k int, v string")
+        got = sorted((r.k, r.v) for r in upsert(new, old, ["k"]).collect())
+        assert got == sorted(new_rows + [(3, "o3")])
 
 
 KV_SCHEMA = "k int not null, v string"
@@ -124,6 +126,7 @@ def test_ttl_cache_flow(spark):
     cache = spark.createDataFrame(
         [
             ("k1", "s", datetime(2024, 1, 20, tzinfo=utc)),  # fresh
+            ("k1", "s", datetime(2024, 1, 20, tzinfo=utc)),  # fresh, twice
             ("k2", "s", datetime(2024, 1, 1, tzinfo=utc)),  # stale
             ("k4", "other", datetime(2024, 1, 20, tzinfo=utc)),  # other source
         ],

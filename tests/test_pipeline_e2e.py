@@ -248,20 +248,34 @@ def cache_rows(spark, base):
 
 
 def test_each_table_is_written_once_and_never_read_back(spark, cfg_base, monkeypatch):
+    from urllib.parse import urlparse
+
     from advisorydatapipeline_spark import pipeline
 
     # prod and cache exist after run 1, so run 2 replaces both
     run_at(spark, cfg_base, "r1", 0, V1)
-    writes, reads = [], []
+    writes, reads, read_groups, cache_inputs = [], [], [], []
     write, read = pipeline.write_table, pipeline.read_table
+    sc = spark.sparkContext
 
     def recording_write(df, path, **kw):
         writes.append(path)
+        if path == f"{cfg_base}/enrichment_cache__tmp":
+            cache_inputs.extend(urlparse(f).path for f in df.inputFiles())
         write(df, path, **kw)
 
     def recording_read(spark, path, schema, **kw):
         reads.append(path)
-        return read(spark, path, schema, **kw)
+        # each call gets its own job group, so the jobs it launched
+        # can be counted afterwards
+        group = f"read-{len(reads)}"
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, path)
+        try:
+            return read(spark, path, schema, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+            read_groups.append((group, path))
 
     monkeypatch.setattr(pipeline, "write_table", recording_write)
     monkeypatch.setattr(pipeline, "read_table", recording_read)
@@ -274,6 +288,20 @@ def test_each_table_is_written_once_and_never_read_back(spark, cfg_base, monkeyp
         assert [p for p in writes if p.startswith(table)] == [table + "__tmp"]
     assert not [p for p in reads if p.endswith("__tmp")]
     assert not list(Path(cfg_base).glob("**/*__tmp"))
+
+    # reads go through the declared schema: no inference job
+    tracker = sc.statusTracker()
+    launched = [(p, tracker.getJobIdsForGroup(g)) for g, p in read_groups]
+    assert launched
+    assert [(p, jobs) for p, jobs in launched if jobs] == []
+    # the cache commit is keyed by the staged raw enrichment, not by a
+    # recomputed worklist over the staged sources
+    roots = (
+        f"{cfg_base}/enrichment_cache/",
+        f"{cfg_base}/staging/run_id=r2/enrichment/raw/",
+    )
+    assert cache_inputs
+    assert [f for f in cache_inputs if not f.startswith(roots)] == []
 
 
 def test_failed_cache_write_keeps_old_cache_and_prod(spark, cfg_base, monkeypatch):
